@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,6 +25,8 @@ class Index:
     doclens: DataFrame  # docno, doclen
     dictionary: DataFrame  # term, termid, df, cf
     postings: DataFrame  # termid, salt, df, cf, n, first/last_docno, max_impact, blob
+    # term -> (termid, df, cf), or None for an out-of-vocabulary term
+    _term_memo: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @property
     def n_docs(self) -> int:
@@ -37,6 +39,32 @@ class Index:
     @property
     def collection_length(self) -> int:
         return self.properties["collection_length"]
+
+    def lookup_terms(self, terms) -> dict[str, tuple[int, int, int]]:
+        """{term: (termid, df, cf)} for the in-dictionary `terms`.
+
+        The one dictionary lookup every query path goes through: terms not
+        yet seen by this Index cost one filtered dictionary-scan job, and
+        every answer (hits AND misses) is memoized, so repeat queries start
+        no job — the in-process form of Ivory's resident dictionary
+        (RetrievalEnvironment.java:66-67). The memo is query-term-sized,
+        never vocabulary-sized, and dies with the Index object, so a
+        reopened (e.g. compacted) index starts clean."""
+        from pyspark.sql import functions as F
+
+        terms = set(terms)
+        memo = self._term_memo
+        missing = sorted(t for t in terms if t not in memo)
+        if missing:
+            found = {
+                r["term"]: (r["termid"], r["df"], r["cf"])
+                for r in self.dictionary.filter(F.col("term").isin(missing))
+                .select("term", "termid", "df", "cf")
+                .collect()
+            }
+            for t in missing:
+                memo[t] = found.get(t)
+        return {t: memo[t] for t in terms if memo[t] is not None}
 
     def docid_expr(self) -> DataFrame:
         """docno -> display docid 'repo/path@commit'."""

@@ -106,14 +106,13 @@ def conjunctive_candidates_bloom(
     """False-positive-tolerant AND: decode only the rarest term's
     postings; test each docno against the other terms' Bloom filters.
     Returns (docno) — a superset of the exact intersection."""
-    dict_rows = index.dictionary.filter(F.col("term").isin(terms)).select(
-        "term", "termid", "df"
-    ).collect()
-    if len(dict_rows) < len(set(terms)):
+    meta = index.lookup_terms(terms)
+    if len(meta) < len(set(terms)):
         return spark.createDataFrame([], "docno long")  # OOV term → empty AND
-    by_df = sorted(dict_rows, key=lambda r: r["df"])
-    driver_tid = int(by_df[0]["termid"])
-    other_tids = [int(r["termid"]) for r in by_df[1:]]
+    # rarest first; termid breaks df ties deterministically
+    by_df = sorted((df, int(tid)) for tid, df, _ in meta.values())
+    driver_tid = by_df[0][1]
+    other_tids = [tid for _, tid in by_df[1:]]
     other_blooms = {
         r["termid"]: bytes(r["bloom"])
         for r in blooms.filter(F.col("termid").isin(other_tids)).collect()

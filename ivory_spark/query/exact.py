@@ -19,11 +19,12 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.query.sharded import candidate_postings, empty_topk, rank_topk
 
 
 def query_term_rows(
@@ -41,7 +42,9 @@ def query_term_rows(
     multiply the term's contribution).
 
     Rows are (qid, termid, qtf, df, cf) — cf is carried for the
-    language-model scorers (Dirichlet/JM background probabilities)."""
+    language-model scorers (Dirichlet/JM background probabilities).
+    Terms resolve through the memoized Index.lookup_terms, so a repeat
+    batch starts no dictionary job."""
     from ivory_spark.functions.tokenizer import get_tokenizer
 
     tok = get_tokenizer(index.properties.get("tokenizer", "code_v1")).tokenize_py
@@ -51,28 +54,7 @@ def query_term_rows(
         counts = sorted(Counter(tok(q["query"])).items())
         per_q.append((q["qid"], counts))
         terms.update(t for t, _ in counts)
-    if not terms:
-        return [], []
-    # per-Index memo of resolved terms (hits AND misses): repeat queries
-    # skip the dictionary-scan job entirely — the in-process form of
-    # Ivory's resident dictionary (RetrievalEnvironment.java:66-67).
-    # Query-term-sized, never vocabulary-sized; dies with the Index
-    # object, so a reopened (e.g. compacted) index starts clean.
-    cache = getattr(index, "_term_cache", None)
-    if cache is None:
-        cache = {}
-        object.__setattr__(index, "_term_cache", cache)
-    missing = sorted(t for t in terms if t not in cache)
-    if missing:
-        found = {
-            r["term"]: (r["termid"], r["df"], r["cf"])
-            for r in index.dictionary.filter(F.col("term").isin(missing))
-            .select("term", "termid", "df", "cf")
-            .collect()
-        }
-        for t in missing:
-            cache[t] = found.get(t)  # None = OOV, cached too
-    lookup = {t: cache[t] for t in terms if cache[t] is not None}
+    lookup = index.lookup_terms(terms)
     rows = []
     termids = set()
     for qid, counts in per_q:
@@ -93,13 +75,6 @@ def query_term_table(
     return spark.createDataFrame(
         rows, "qid string, termid long, qtf int, df int, cf long"
     )
-
-
-def candidate_postings(index: Index, termids: list[int]) -> DataFrame:
-    """Postings runs for the given termids — a literal IN filter so the
-    Parquet scan prunes row groups by termid min/max (the columnar
-    replacement for IntPostingsForwardIndex byte-offset seeks)."""
-    return index.postings.filter(F.col("termid").isin([int(t) for t in termids]))
 
 
 def _decode_runs(runs: DataFrame) -> DataFrame:
@@ -130,6 +105,19 @@ def _decode_runs(runs: DataFrame) -> DataFrame:
     )
 
 
+def _weighted_query_rows(index: Index, wqueries: list[dict]) -> tuple[list[tuple], list[int]]:
+    """([(qid, termid, weight, df), ...], sorted unique termids) for the
+    in-dictionary terms of weighted queries; OOV terms drop out."""
+    lookup = index.lookup_terms(t for q in wqueries for t, _ in q["terms"])
+    rows = [
+        (q["qid"], int(lookup[t][0]), float(w), int(lookup[t][1]))
+        for q in wqueries
+        for t, w in sorted(q["terms"])
+        if t in lookup
+    ]
+    return rows, sorted({r[1] for r in rows})
+
+
 def weighted_query_table(
     spark: SparkSession, index: Index, wqueries: list[dict]
 ) -> DataFrame:
@@ -137,19 +125,8 @@ def weighted_query_table(
     [{'qid', 'terms': [(term, weight), ...]}] — the #weight/#combine
     structured-query surface (ivory/sqe/retrieval/StructuredQuery.java,
     PostingsReaderWrapper.java:47-190: weights scale each term's score)."""
-    rows = []
-    terms = set()
-    for q in wqueries:
-        for term, w in sorted(q["terms"]):
-            rows.append((q["qid"], term, float(w)))
-            terms.add(term)
-    if not rows:
-        return spark.createDataFrame([], "qid string, termid long, qtf float, df int")
-    qt = spark.createDataFrame(rows, "qid string, term string, qtf float")
-    dict_rows = index.dictionary.filter(F.col("term").isin(sorted(terms))).select(
-        "term", "termid", "df"
-    )
-    return qt.join(F.broadcast(dict_rows), "term").select("qid", "termid", "qtf", "df")
+    rows, _ = _weighted_query_rows(index, wqueries)
+    return spark.createDataFrame(rows, "qid string, termid long, qtf float, df int")
 
 
 def bm25_topk(
@@ -182,18 +159,15 @@ def bm25_topk(
     idf_mode = p.get("idf", props["idf_mode"])
 
     if weighted:
-        qt = weighted_query_table(spark, index, queries)
-        termids = [r["termid"] for r in qt.select("termid").distinct().collect()]
+        rows, termids = _weighted_query_rows(index, queries)
+        qt = spark.createDataFrame(rows, "qid string, termid long, qtf float, df int")
     else:
         rows, termids = query_term_rows(index, queries)
         qt = spark.createDataFrame(
             rows, "qid string, termid long, qtf int, df int, cf long"
         ).drop("cf")
     if not termids:
-        schema = "qid string, rank int, docno long, score float"
-        if with_docid:
-            schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return empty_topk(spark, with_docid)
 
     postings = _decode_runs(candidate_postings(index, termids))
     cand = postings.join(F.broadcast(qt), "termid")
@@ -222,7 +196,7 @@ def bm25_topk(
             .drop("prior")
         )
 
-    return _rank_topk(index, scored, k, with_docid)
+    return rank_topk(index, scored, k, with_docid)
 
 
 _FOLD_SHARDS = 64
@@ -266,21 +240,6 @@ def _fold_scores(cand: DataFrame) -> DataFrame:
         fold,
         schema="qid string, docno long, score float",
     )
-
-
-def _rank_topk(index: Index, scored: DataFrame, k: int, with_docid: bool) -> DataFrame:
-    """Window top-k with Ivory's tie-break (score desc, docno desc)."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if with_docid:
-        # q*k rows behind a window have no size estimate — broadcast the
-        # tiny side so the docmap join never goes sort-merge (guide §3.1)
-        topk = F.broadcast(topk).join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
 
 
 def scored_topk(
@@ -334,10 +293,7 @@ def scored_topk(
     rows, termids = query_term_rows(index, queries)
     qt = spark.createDataFrame(rows, "qid string, termid long, qtf int, df int, cf long")
     if not termids:
-        schema = "qid string, rank int, docno long, score float"
-        if with_docid:
-            schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return empty_topk(spark, with_docid)
 
     postings = _decode_runs(candidate_postings(index, termids))
     if scorer in ("dirichlet", "jm"):
@@ -416,12 +372,11 @@ def scored_topk(
             else:
                 score_dbl = F.col("pd") + F.col("cq")
             pre = pre.withColumn("_sd", score_dbl)
-            w = Window.partitionBy("qid").orderBy(F.desc("_sd"))
+            # the k-th best prescore per qid (tie order cannot move it)
             cutoff = (
-                pre.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") <= k)
+                rank_topk(index, pre.select("qid", "docno", F.col("_sd").alias("score")), k, False)
                 .groupBy("qid")
-                .agg(F.min("_sd").alias("_cut"))
+                .agg(F.min("score").alias("_cut"))
             )
             # margin >> float32 fold error (~n_terms * ulp(|score|))
             cands = (
@@ -479,7 +434,7 @@ def scored_topk(
     else:
         raise ValueError(f"unknown scorer: {scorer}")
 
-    return _rank_topk(index, _fold_scores(cand), k, with_docid)
+    return rank_topk(index, _fold_scores(cand), k, with_docid)
 
 
 def release_caches() -> None:

@@ -17,8 +17,9 @@ Reference semantics reproduced:
 - aggregation operators sum / mean / max / min / variance /
   boolean_count / boolean_ratio (ltr/operator/*.java), default Sum.
 
-Spark-first shape: the same doc-sharded applyInPandas kernel as
-mrf_topk — postings runs of the query terms are joined to (qid, shard)
+Spark-first shape: the fan-out half of the sharded executor
+(query/sharded.shard_runs — not its top-k merge, since every judged doc
+is a row): postings runs of the query terms are joined to (qid, shard)
 groups, decoded once, and every judged doc in the shard gets its clique
 potentials from the batched CSR window kernels. Judged docs containing
 NO query term never meet a postings row, so their rows (background
@@ -43,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ivory_spark.functions.gmap import grouped_apply
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index.reader import Index
 from ivory_spark.query.batch import Model
@@ -55,9 +57,10 @@ from ivory_spark.query.mrf import (
     assemble_term_data,
     build_cliques,
     decode_shard_runs,
-    make_shard_bounds,
-    shard_of_expr,
+    max_position,
+    term_stats,
 )
+from ivory_spark.query.sharded import make_shard_bounds, shard_runs
 
 F32 = np.float32
 
@@ -114,10 +117,7 @@ def clique_potentials_batch(
     m = len(dl)
     default_df = n_docs // 100
     default_cf = default_df * 2
-    max_pos = 0
-    for td in term_data.values():
-        if td.flat_pos.size:
-            max_pos = max(max_pos, int(td.flat_pos.max()))
+    max_pos = max_position(term_data)
     per_spec: list[list[np.ndarray]] = [[] for _ in range(n_specs)]
     zero_tf = np.zeros(m, dtype=np.int64)
     for c in cliques:
@@ -270,7 +270,6 @@ def extract_features(
     props = index.properties
     positional = bool(props.get("positional"))
     n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
-    n_shards = props["n_shards"]
     tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
 
     mrfs = {name: _as_mrf(m) for name, m in models.items()}
@@ -291,11 +290,9 @@ def extract_features(
         raise ValueError(f"operators for unknown feature columns: {sorted(unknown)}")
     ops = _resolve_ops(col_names, base_of, op_by_name)
 
-    all_tokens = sorted({t for q in queries for t in tokenize(q["query"])})
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_tokens)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
-    termids = sorted(term_by_id)
+    stats, term_by_id = term_stats(
+        index, {t for q in queries for t in tokenize(q["query"])}
+    )
 
     # per-query cliques over the postings-backed token subsequence
     # (ExtractFeatures.java:83-97), spec fids remapped to global columns
@@ -331,7 +328,7 @@ def extract_features(
     dl_rows = index.doclens.filter(F.col("docno").isin(all_judged)).collect()
     dl_by_docno = {r["docno"]: r["doclen"] for r in dl_rows}
 
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
+    shard_bounds = make_shard_bounds(props["n_shards"], n_docs)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         qid, shard = key
@@ -339,9 +336,7 @@ def extract_features(
         ja = judged[qid]
         cand = ja[(ja >= lo) & (ja <= hi)]
         if len(cand) == 0:
-            return pd.DataFrame({"qid": [], "docno": [], "feats": []}).astype(
-                {"qid": str, "docno": np.int64, "feats": object}
-            )
+            return None  # grouped_apply emits nothing for this group
         decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
         term_data, _ = assemble_term_data(decoded, cand) if decoded else ({}, None)
         dl_vec = np.array([dl_by_docno.get(int(d), 0) for d in cand], dtype=np.int64)
@@ -353,28 +348,15 @@ def extract_features(
             {"qid": qid, "docno": cand, "feats": [r for r in feats]}
         )
 
-    if termids:
-        cols = ["termid", "n", "first_docno", "last_docno", "blob"]
-        if positional:
-            cols.append("pos_blob")
-        runs = index.postings.filter(F.col("termid").isin(termids)).select(*cols)
-        qrows = [
-            (qid, int(tid))
-            for qid in q_cliques
-            for tid in termids
-            if term_by_id[tid] in q_terms[qid]
-        ]
-        qdf = spark.createDataFrame(qrows, "qid string, termid long")
-        runs = runs.join(F.broadcast(qdf), "termid")
-        shard_of = shard_of_expr(n_shards, n_docs)
-        runs = runs.withColumn(
-            "shard",
-            F.explode(
-                F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))
-            ),
-        )
-        from ivory_spark.functions.gmap import grouped_apply
-
+    cols = ["termid", "n", "first_docno", "last_docno", "blob"]
+    if positional:
+        cols.append("pos_blob")
+    runs = shard_runs(
+        index,
+        [(qid, tid) for qid, ts in q_terms.items() for tid, t in term_by_id.items() if t in ts],
+        cols,
+    )
+    if runs is not None:
         # per-partition dispatch, not per-(qid, shard) group (gmap.py)
         scored = grouped_apply(
             runs, ["qid", "shard"], kernel, schema=feat_schema

@@ -30,8 +30,10 @@ with tf=0 score the reference's background probability (nonzero,
 doclen-dependent), clamped to 0 only when the clique's cf heuristic
 degenerates to 0 on a sub-100-doc corpus.
 
-The MRF path is exact (no pruning); its golden oracle is oracle_mrf_topk
-below, which shares every kernel with the Spark path.
+The MRF path is exact (no pruning). On Spark it is a per-(qid, shard)
+kernel over the sharded top-k executor (query/sharded.py); its golden
+oracle is oracle_mrf_topk below, which shares every kernel with the
+Spark path.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import (
     F32,
@@ -51,8 +53,10 @@ from ivory_spark.functions.scoring import (
 from ivory_spark.functions.tokenizer import MAX_TF, get_tokenizer
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.query.sharded import local_topk, shard_of_expr, shard_runs, sharded_topk
 
 SHORT_MAX = 32767
+_NO_DOCS = np.empty(0, dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -464,6 +468,12 @@ class TermData:
     flat_pos: np.ndarray  # int64: positions, concatenated in doc_rows order
 
 
+def max_position(term_data: dict[str, TermData]) -> int:
+    """Largest position over every term's postings (0 when none) — the
+    offset stride the batched window kernels need."""
+    return max((int(td.flat_pos.max()) for td in term_data.values() if td.flat_pos.size), default=0)
+
+
 def _gather_csr(
     flat: np.ndarray, indptr: np.ndarray, rows: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -551,10 +561,7 @@ def score_docs_batch(
     m = len(dl)
     default_df = n_docs // 100
     default_cf = default_df * 2
-    max_pos = 0
-    for td in term_data.values():
-        if td.flat_pos.size:
-            max_pos = max(max_pos, int(td.flat_pos.max()))
+    max_pos = max_position(term_data)
     acc = np.zeros(m, dtype=np.float32)
     zero_tf = np.zeros(m, dtype=np.int64)
     for c in cliques:
@@ -623,33 +630,6 @@ def assemble_term_data(
     return term_data, dl_vec
 
 
-# ---------------------------------------------------------------------------
-# doc-shard grid — THE shard invariant, shared by every sharded kernel
-# (mrf_topk, sqe.sqe_topk, features.extract_features): a docno d lands in
-# shard floor(d * n_shards / (n_docs + 1)), and shard s covers the
-# docno range returned by the bounds function (ceil-division inverse).
-# Keep these three definitions as the single source of truth — the
-# float32 rank-identity contract depends on every kernel agreeing on
-# shard membership at the boundaries.
-# ---------------------------------------------------------------------------
-
-
-def shard_of_expr(n_shards: int, n_docs: int):
-    """Column expr factory: docno column -> int shard id."""
-    return lambda c: F.floor(c * F.lit(n_shards) / F.lit(n_docs + 1)).cast("int")
-
-
-def make_shard_bounds(n_shards: int, n_docs: int):
-    """-> bounds(s) giving shard s's inclusive [lo, hi] docno range."""
-
-    def bounds(s: int) -> tuple[int, int]:
-        lo = -((-s * (n_docs + 1)) // n_shards)
-        hi = -((-(s + 1) * (n_docs + 1)) // n_shards) - 1
-        return max(lo, 1), min(hi, n_docs)
-
-    return bounds
-
-
 def decode_shard_runs(pdf: pd.DataFrame, term_by_id: dict, lo: int, hi: int) -> list:
     """Decode each postings-run row of one (qid, shard) group, masked to
     the shard's [lo, hi] docno range -> [(term, docnos int64, tfs, dls,
@@ -679,30 +659,37 @@ def decode_shard_runs(pdf: pd.DataFrame, term_by_id: dict, lo: int, hi: int) -> 
 # ---------------------------------------------------------------------------
 
 
+def term_stats(index: Index, terms) -> tuple[dict, dict]:
+    """-> ({term: (df, cf)}, {termid: term}) for the in-dictionary
+    `terms`, resolved through the memoized Index.lookup_terms."""
+    meta = index.lookup_terms(terms)
+    return (
+        {t: (df, cf) for t, (_, df, cf) in meta.items()},
+        {tid: t for t, (tid, _, _) in meta.items()},
+    )
+
+
 def mrf_topk(
     spark: SparkSession,
     index: Index,
     queries: list[dict],
     model: MrfModel | None = None,
     with_docid: bool = True,
-    candidates: dict[str, set[int]] | None = None,
     extra_cliques: dict[str, list[dict]] | None = None,
     candidates_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact SD/FD retrieval over a positional index: doc-sharded kernel
-    (same shard grid as WAND), per-doc clique scoring, global top-k with
-    the (score desc, docno desc) tie-break.
+    """Exact SD/FD retrieval over a positional index: per-doc clique
+    scoring as a kernel over the sharded top-k executor
+    (query/sharded.py), global top-k with the (score desc, docno desc)
+    tie-break.
 
-    candidates: optional qid -> docno set; when given, only those docs
-    are scored (the cascade-ranking reranker contract — an expensive
-    stage applied to a cheap stage's survivors,
-    ivory/cascade/retrieval/CascadeEval.java).
-
-    candidates_df: the same restriction as a (qid, docno) DataFrame —
-    the allow-list never touches the driver: candidate rows are tagged
-    (termid = -1) into the same (qid, shard) groups as the postings
-    runs, so a 10^5-query cascade stays fully distributed. Mutually
-    exclusive with `candidates`; bit-identical results (tested).
+    candidates_df: optional (qid, docno) DataFrame; when given, only
+    those docs are scored (the cascade-ranking reranker contract — an
+    expensive stage applied to a cheap stage's survivors,
+    ivory/cascade/retrieval/CascadeEval.java). The allow-list never
+    touches the driver: candidate rows are tagged (termid = -1) into the
+    same (qid, shard) groups as the postings runs, so a 10^5-query
+    cascade stays fully distributed.
 
     extra_cliques: optional qid -> additional clique dicts appended after
     the query-derived ones (latent-concept expansion injects mined
@@ -714,137 +701,62 @@ def mrf_topk(
     if not props.get("positional"):
         raise ValueError("mrf_topk requires an index built with positional=True")
     n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
-    n_shards = props["n_shards"]
     k = model.k
 
     tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
     extra = extra_cliques or {}
-    extra_terms = {
-        qid: sorted({t for c in cls for t in c["terms"]}) for qid, cls in extra.items()
+    q_terms = {
+        q["qid"]: set(tokenize(q["query"]))
+        | {t for c in extra.get(q["qid"], ()) for t in c["terms"]}
+        for q in queries
     }
-    all_terms = sorted(
-        {t for q in queries for t in tokenize(q["query"])}
-        | {t for ts in extra_terms.values() for t in ts}
-    )
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_terms)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
-    termids = sorted(term_by_id)
-
+    stats, term_by_id = term_stats(index, set().union(*q_terms.values()))
     q_cliques = {
         q["qid"]: build_cliques(tokenize(q["query"]), model)
         + list(extra.get(q["qid"], []))
         for q in queries
     }
-    q_terms = {
-        q["qid"]: sorted(
-            (set(tokenize(q["query"])) | set(extra_terms.get(q["qid"], ())))
-            & set(stats)
-        )
-        for q in queries
-    }
-
-    if not termids:
-        schema = "qid string, rank int, docno long, score float"
-        if with_docid:
-            schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
-
-    runs = index.postings.filter(F.col("termid").isin(termids)).select(
-        "termid", "n", "first_docno", "last_docno", "blob", "pos_blob"
+    runs = shard_runs(
+        index,
+        [(qid, tid) for qid, ts in q_terms.items() for tid, t in term_by_id.items() if t in ts],
+        ["termid", "n", "first_docno", "last_docno", "blob", "pos_blob"],
     )
-    qrows = [
-        (q["qid"], int(tid))
-        for q in queries
-        for tid in termids
-        if term_by_id[tid] in q_terms[q["qid"]]
-    ]
-    qdf = spark.createDataFrame(qrows, "qid string, termid long")
-    runs = runs.join(F.broadcast(qdf), "termid")
-    shard_of = shard_of_expr(n_shards, n_docs)
-    runs = runs.withColumn(
-        "shard",
-        F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))),
-    )
-    if candidates_df is not None:
-        if candidates is not None:
-            raise ValueError("pass either candidates or candidates_df, not both")
+    if runs is not None and candidates_df is not None:
         # allow-list rows ride the SAME (qid, shard) shuffle as the runs
         # (termid -1 marks them); no driver round-trip
-        cand_rows = candidates_df.select(
-            F.lit(-1).cast("long").alias("termid"),
-            F.lit(0).cast(runs.schema["n"].dataType).alias("n"),
-            F.col("docno").alias("first_docno"),
-            F.col("docno").alias("last_docno"),
-            F.lit(None).cast("binary").alias("blob"),
-            F.lit(None).cast("binary").alias("pos_blob"),
-            F.col("qid"),
-            shard_of(F.col("docno")).alias("shard"),
+        shard_of = shard_of_expr(props["n_shards"], n_docs)
+        runs = runs.unionByName(
+            candidates_df.select(
+                F.lit(-1).cast("long").alias("termid"),
+                F.lit(0).cast(runs.schema["n"].dataType).alias("n"),
+                F.col("docno").alias("first_docno"),
+                F.col("docno").alias("last_docno"),
+                F.lit(None).cast("binary").alias("blob"),
+                F.lit(None).cast("binary").alias("pos_blob"),
+                F.col("qid"),
+                shard_of(F.col("docno")).alias("shard"),
+            )
         )
-        runs = runs.unionByName(cand_rows)
 
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
+    restricted = candidates_df is not None  # the kernel must not capture the frame
 
-    cand_sorted = (
-        {q: np.array(sorted(s), dtype=np.int64) for q, s in candidates.items()}
-        if candidates is not None
-        else None
-    )
-
-    df_mode = candidates_df is not None
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        cliques = q_cliques[qid]
-        allow_rows = None
-        if df_mode:
-            is_cand = pdf["termid"].to_numpy() == -1
-            allow_rows = np.unique(pdf["first_docno"].to_numpy()[is_cand]).astype(
-                np.int64
-            )
-            pdf = pdf[~is_cand]
+    def kernel(qid, pdf: pd.DataFrame, lo: int, hi: int):
+        is_cand = pdf["termid"].to_numpy() == -1
         # pass 1: decode each term's run once, mask to the shard range
-        decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
-        if not decoded:
-            return pd.DataFrame(columns=["qid", "docno", "score"]).astype(
-                {"qid": str, "docno": np.int64, "score": np.float32}
-            )
+        decoded = decode_shard_runs(pdf[~is_cand], term_by_id, lo, hi)
         # candidate-doc universe = union of query-term docs in the shard
-        cand = np.unique(np.concatenate([d for _, d, _, _, _, _ in decoded]))
-        if cand_sorted is not None:
-            allow = cand_sorted.get(qid, np.empty(0, dtype=np.int64))
-            cand = cand[np.isin(cand, allow, assume_unique=True)]
-        if allow_rows is not None:
-            cand = cand[np.isin(cand, allow_rows, assume_unique=True)]
+        cand = np.unique(np.concatenate([e[1] for e in decoded] + [_NO_DOCS]))
+        if restricted:
+            cand = cand[np.isin(cand, pdf["first_docno"].to_numpy()[is_cand])]
         if len(cand) == 0:
-            return pd.DataFrame(columns=["qid", "docno", "score"]).astype(
-                {"qid": str, "docno": np.int64, "score": np.float32}
-            )
+            return cand, np.empty(0, dtype=np.float32)
         term_data, dl_vec = assemble_term_data(decoded, cand)
         scores = score_docs_batch(
-            cliques, term_data, dl_vec, stats, n_docs, avgdl, clen
+            q_cliques[qid], term_data, dl_vec, stats, n_docs, avgdl, clen
         )
-        # local top-k before the global merge (score desc, docno desc)
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        return pd.DataFrame(
-            {"qid": qid, "docno": cand[sel], "score": scores[sel]}
-        )
+        return local_topk(cand, scores, k)
 
-    from ivory_spark.functions.gmap import grouped_apply
-
-    # one Python dispatch per partition instead of per (qid, shard)
-    # group — the tiny-group Arrow round-trip tax dominates batched
-    # query kernels otherwise (see functions/gmap.py)
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        topk = topk.join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
+    return sharded_topk(index, runs, kernel, k, with_docid)
 
 
 # ---------------------------------------------------------------------------
@@ -891,8 +803,8 @@ def oracle_mrf_topk(
             continue
         d = np.array([x[0] for x in scored], dtype=np.int64)
         s = np.array([x[1] for x in scored], dtype=np.float32)
-        sel = np.lexsort((-d, -s.astype(np.float64)))[: model.k]
+        d, s = local_topk(d, s, model.k)
         out[q["qid"]] = [
-            {"docno": int(d[i]), "docid": oi.docids[int(d[i])], "score": s[i]} for i in sel
+            {"docno": int(dn), "docid": oi.docids[int(dn)], "score": sc} for dn, sc in zip(d, s)
         ]
     return out

@@ -29,6 +29,15 @@ import numpy as np
 import pandas as pd
 
 from ivory_spark.functions.tokenizer import get_tokenizer
+from ivory_spark.query.mrf import (
+    MrfModel,
+    assemble_term_data,
+    build_cliques,
+    decode_shard_runs,
+    score_docs_batch,
+)
+from ivory_spark.query.sharded import local_topk
+from ivory_spark.query.sqe import _walk, parse_structured_query, query_terms, tree_scores
 from ivory_spark.query.wand import _score_group
 
 
@@ -124,6 +133,34 @@ class LocalSearcher:
             for r in tab.itertuples(index=False)
         }
 
+    def _ranked(self, docnos, scores, with_docid: bool) -> list[dict]:
+        """Ranked (docnos, scores) -> [{rank, docno, score[, docid]}]."""
+        ids = self.docids([int(d) for d in docnos]) if with_docid else {}
+        out = []
+        for rank, (d, s) in enumerate(zip(docnos, scores), start=1):
+            row = {"rank": rank, "docno": int(d), "score": np.float32(s)}
+            if with_docid:
+                row["docid"] = ids.get(int(d), "")
+            out.append(row)
+        return out
+
+    def _term_data(self, terms, positions: bool):
+        """In-dictionary `terms` -> (stats, candidate docnos, term_data,
+        dl_vec) over every doc holding one of them — the same
+        decode_shard_runs + assemble_term_data pass the Spark kernels run
+        per shard, here over the whole docno range. None when no term
+        has postings."""
+        meta = {t: self._dict[t] for t in terms if t in self._dict}
+        term_by_id = {int(m[0]): t for t, m in meta.items()}
+        runs = self._runs_for(sorted(term_by_id), positions=positions)
+        decoded = decode_shard_runs(runs, term_by_id, 1, self.props["n_docs"])
+        if not decoded:
+            return None
+        cand = np.unique(np.concatenate([e[1] for e in decoded]))
+        term_data, dl_vec = assemble_term_data(decoded, cand)
+        stats = {t: (int(m[1]), int(m[2])) for t, m in meta.items()}
+        return stats, cand, term_data, dl_vec
+
     def search_sd(
         self, query: str, k: int = 10, with_docid: bool = True, model=None
     ) -> list[dict]:
@@ -132,59 +169,20 @@ class LocalSearcher:
         (build_cliques + score_docs_batch), run in-process over the
         pyarrow-read candidate runs; scores are float32 bit-identical to
         the Spark MRF path and the numpy oracle."""
-        from ivory_spark.index import codec
-        from ivory_spark.query.mrf import (
-            MrfModel,
-            assemble_term_data,
-            build_cliques,
-            score_docs_batch,
-        )
-
         p = self.props
         if not p.get("positional"):
             raise ValueError("search_sd requires a positional index")
-        model = model or MrfModel()
         tokens = self._tokenize(query)
-        cliques = build_cliques(tokens, model)
-        stats = {}
-        termid_of = {}
-        for t in set(tokens):
-            meta = self._dict.get(t)
-            if meta is not None:
-                termid_of[t] = int(meta[0])
-                stats[t] = (int(meta[1]), int(meta[2]))
-        if not termid_of:
+        cliques = build_cliques(tokens, model or MrfModel())
+        found = self._term_data(set(tokens), positions=True)
+        if found is None:
             return []
-        term_by_id = {tid: t for t, tid in termid_of.items()}
-        runs = self._runs_for(sorted(term_by_id), positions=True)
-        decoded = []  # (term, docnos, tfs, dls, flat_pos, indptr)
-        for row in runs.itertuples(index=False):
-            term = term_by_id.get(int(row.termid))
-            if term is None:
-                continue
-            d, tf, dl = codec.decode_run(bytes(row.blob))
-            flat, iptr = codec.decode_positions_flat(
-                bytes(row.pos_blob) if row.pos_blob is not None else b"", tf
-            )
-            decoded.append((term, d.astype(np.int64), tf.astype(np.int64),
-                            dl.astype(np.int64), flat, iptr))
-        if not decoded:
-            return []
-        cand = np.unique(np.concatenate([e[1] for e in decoded]))
-        term_data, dl_vec = assemble_term_data(decoded, cand)
+        stats, cand, term_data, dl_vec = found
         scores = score_docs_batch(
             cliques, term_data, dl_vec, stats,
             p["n_docs"], p["avgdl"], p["collection_length"],
         )
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        ids = self.docids([int(cand[i]) for i in sel]) if with_docid else {}
-        out = []
-        for rank, i in enumerate(sel, start=1):
-            row = {"rank": rank, "docno": int(cand[i]), "score": np.float32(scores[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(cand[i]), "")
-            out.append(row)
-        return out
+        return self._ranked(*local_topk(cand, scores, k), with_docid)
 
     def search_sqe(
         self, query, k: int = 10, with_docid: bool = True
@@ -194,73 +192,21 @@ class LocalSearcher:
         folds, TfDf blending) over pyarrow-read runs — bit-identical to
         the Spark path. `query` is a JSON operator tree (text or dict);
         phrase leaves need a positional index."""
-        from ivory_spark.index import codec
-        from ivory_spark.query.sqe import (
-            _candidate_mask,
-            _eval_node,
-            _score_of,
-            _walk,
-            parse_structured_query,
-            query_terms,
-        )
-
         p = self.props
         tree = parse_structured_query(query, tokenizer=self._tokenize)
         needs_positions = any(n.op == "phrase" for n in _walk(tree))
         if needs_positions and not p.get("positional"):
             raise ValueError("phrase leaves require a positional index")
-        stats = {}
-        termid_of = {}
-        for t in query_terms(tree):
-            meta = self._dict.get(t)
-            if meta is not None:
-                termid_of[t] = int(meta[0])
-                stats[t] = (int(meta[1]), int(meta[2]))
-        if not termid_of:
+        found = self._term_data(query_terms(tree), positions=bool(p.get("positional")))
+        if found is None:
             return []
-        term_by_id = {tid: t for t, tid in termid_of.items()}
-        runs = self._runs_for(
-            sorted(term_by_id), positions=bool(p.get("positional"))
-        )
-        decoded = []
-        for row in runs.itertuples(index=False):
-            term = term_by_id.get(int(row.termid))
-            if term is None:
-                continue
-            d, tf, dl = codec.decode_run(bytes(row.blob))
-            pos_blob = getattr(row, "pos_blob", None)
-            flat, iptr = codec.decode_positions_flat(
-                bytes(pos_blob) if pos_blob is not None else b"", tf
-            )
-            decoded.append((term, d.astype(np.int64), tf.astype(np.int64),
-                            dl.astype(np.int64), flat, iptr))
-        if not decoded:
-            return []
-        from ivory_spark.query.mrf import assemble_term_data
-
-        cand = np.unique(np.concatenate([e[1] for e in decoded]))
-        term_data, dl_vec = assemble_term_data(decoded, cand)
-        max_pos = 0
-        for td in term_data.values():
-            if td.flat_pos.size:
-                max_pos = max(max_pos, int(td.flat_pos.max()))
+        stats, cand, term_data, dl_vec = found
         n_docs = p["n_docs"]
-        avgdl_int = float(p["collection_length"] // n_docs)
-        mask = _candidate_mask(tree, term_data, stats, len(cand), max_pos)
-        if not mask.any():
-            return []
-        res = _eval_node(tree, term_data, dl_vec, stats, n_docs, avgdl_int, max_pos)
-        scores = _score_of(res, dl_vec, n_docs, avgdl_int)
-        cand, scores = cand[mask], scores[mask]
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        ids = self.docids([int(cand[i]) for i in sel]) if with_docid else {}
-        out = []
-        for rank, i in enumerate(sel, start=1):
-            row = {"rank": rank, "docno": int(cand[i]), "score": np.float32(scores[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(cand[i]), "")
-            out.append(row)
-        return out
+        d, s = tree_scores(
+            tree, cand, term_data, dl_vec, stats, n_docs,
+            float(p["collection_length"] // n_docs),
+        )
+        return self._ranked(*local_topk(d, s, k), with_docid)
 
     def search(self, query: str, k: int = 10, with_docid: bool = True) -> list[dict]:
         """-> [{rank, docno[, docid], score}] — Ivory tie-break, scores
@@ -290,11 +236,4 @@ class LocalSearcher:
             hi=p["n_docs"],
             k=k,
         )
-        ids = self.docids([int(x) for x in d]) if with_docid else {}
-        out = []
-        for i in range(len(d)):
-            row = {"rank": i + 1, "docno": int(d[i]), "score": np.float32(s[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(d[i]), "")
-            out.append(row)
-        return out
+        return self._ranked(d, s, with_docid)

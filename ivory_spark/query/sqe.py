@@ -35,10 +35,10 @@ weights far above 1 can blend df beyond N, where the reference's
 ln((N-df+0.5)/(df+0.5)) returns NaN exactly as Java's Math.log would —
 reproduced, not guarded (fuzz-tested in tests/test_sqe.py).
 
-Spark-first shape: the same doc-sharded applyInPandas kernel as
-mrf_topk — one decode of each term's runs per (qid, shard), CSR
-position gathers, the whole tree evaluated vectorized over the shard's
-candidate docs, local top-k, then one global top-k window.
+Spark-first shape: a kernel over the sharded top-k executor
+(query/sharded.py) — one decode of each term's runs per (qid, shard),
+CSR position gathers, the whole tree evaluated vectorized over the
+shard's candidate docs (tree_scores, shared with warm serving).
 """
 
 from __future__ import annotations
@@ -48,8 +48,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index.reader import Index
@@ -59,9 +58,10 @@ from ivory_spark.query.mrf import (
     assemble_term_data,
     count_ordered_matches,
     decode_shard_runs,
-    make_shard_bounds,
-    shard_of_expr,
+    max_position,
+    term_stats,
 )
+from ivory_spark.query.sharded import local_topk, shard_runs, sharded_topk
 
 F32 = np.float32
 K1 = F32(0.5)  # TfDfWeight.java:23
@@ -264,6 +264,19 @@ def _candidate_mask(
     return mask
 
 
+def tree_scores(
+    tree: SqeNode, cand: np.ndarray, term_data: dict[str, TermData],
+    dl_vec: np.ndarray, stats: dict, n_docs: int, avgdl_int: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Evaluate `tree` over the candidate docs `cand` -> (docnos, float32
+    scores) of the docs where at least one leaf matches — the kernel the
+    Spark path and warm serving share."""
+    max_pos = max_position(term_data)
+    mask = _candidate_mask(tree, term_data, stats, len(cand), max_pos)
+    res = _eval_node(tree, term_data, dl_vec, stats, n_docs, avgdl_int, max_pos)
+    return cand[mask], _score_of(res, dl_vec, n_docs, avgdl_int)[mask]
+
+
 def sqe_topk(
     spark: SparkSession,
     index: Index,
@@ -277,7 +290,6 @@ def sqe_topk(
     props = index.properties
     n_docs, clen = props["n_docs"], props["collection_length"]
     avgdl_int = float(clen // n_docs)  # Java integer division, see header
-    n_shards = props["n_shards"]
     tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
 
     trees = {
@@ -289,76 +301,27 @@ def sqe_topk(
     )
     if needs_positions and not props.get("positional"):
         raise ValueError("phrase leaves require an index built with positional=True")
-    all_terms = sorted({t for tree in trees.values() for t in query_terms(tree)})
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_terms)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
-    termids = sorted(term_by_id)
-
-    out_schema = "qid string, rank int, docno long"
-    out_schema += (", docid string" if with_docid else "") + ", score float"
-    if not termids:
-        return spark.createDataFrame([], out_schema)
-
+    q_terms = {qid: query_terms(t) for qid, t in trees.items()}
+    stats, term_by_id = term_stats(index, set().union(*q_terms.values()))
     cols = ["termid", "n", "first_docno", "last_docno", "blob"]
     if props.get("positional"):
         cols.append("pos_blob")
-    runs = index.postings.filter(F.col("termid").isin(termids)).select(*cols)
-    q_terms = {qid: query_terms(t) & set(stats) for qid, t in trees.items()}
-    qrows = [
-        (qid, int(tid))
-        for qid in trees
-        for tid in termids
-        if term_by_id[tid] in q_terms[qid]
-    ]
-    qdf = spark.createDataFrame(qrows, "qid string, termid long")
-    runs = runs.join(F.broadcast(qdf), "termid")
-    shard_of = shard_of_expr(n_shards, n_docs)
-    runs = runs.withColumn(
-        "shard",
-        F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))),
+    runs = shard_runs(
+        index,
+        [(qid, tid) for qid, ts in q_terms.items() for tid, t in term_by_id.items() if t in ts],
+        cols,
     )
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
+    def kernel(qid, pdf: pd.DataFrame, lo: int, hi: int):
         decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
-        empty = pd.DataFrame({"qid": [], "docno": [], "score": []}).astype(
-            {"qid": str, "docno": np.int64, "score": np.float32}
-        )
         if not decoded:
-            return empty
-        cand = np.unique(np.concatenate([d for _, d, _, _, _, _ in decoded]))
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
+        cand = np.unique(np.concatenate([e[1] for e in decoded]))
         term_data, dl_vec = assemble_term_data(decoded, cand)
-        max_pos = 0
-        for td in term_data.values():
-            if td.flat_pos.size:
-                max_pos = max(max_pos, int(td.flat_pos.max()))
-        tree = trees[qid]
-        mask = _candidate_mask(tree, term_data, stats, len(cand), max_pos)
-        if not mask.any():
-            return empty
-        res = _eval_node(tree, term_data, dl_vec, stats, n_docs, avgdl_int, max_pos)
-        scores = _score_of(res, dl_vec, n_docs, avgdl_int)
-        cand, scores = cand[mask], scores[mask]
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        return pd.DataFrame({"qid": qid, "docno": cand[sel], "score": scores[sel]})
+        d, s = tree_scores(trees[qid], cand, term_data, dl_vec, stats, n_docs, avgdl_int)
+        return local_topk(d, s, k)
 
-    from ivory_spark.functions.gmap import grouped_apply
-
-    # one Python dispatch per partition instead of per (qid, shard)
-    # group — the tiny-group Arrow round-trip tax dominates batched
-    # query kernels otherwise (see functions/gmap.py)
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        topk = topk.join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
+    return sharded_topk(index, runs, kernel, k, with_docid)
 
 
 def _walk(node: SqeNode):
@@ -476,9 +439,9 @@ def oracle_sqe_topk(
             continue
         d = np.array([x[0] for x in scored], dtype=np.int64)
         s = np.array([x[1] for x in scored], dtype=np.float32)
-        sel = np.lexsort((-d, -s.astype(np.float64)))[:k]
+        d, s = local_topk(d, s, k)
         out[q["qid"]] = [
-            {"docno": int(d[i]), "docid": oi.docids[int(d[i])], "score": s[i]}
-            for i in sel
+            {"docno": int(dn), "docid": oi.docids[int(dn)], "score": sc}
+            for dn, sc in zip(d, s)
         ]
     return out

@@ -6,25 +6,18 @@ ivory/smrf/model/score/BM25ScoringFunction.java:73-89) to block-max
 pruning using the per-block max-impact metadata the codec stores
 (block layout modeled on ivory/bloomir/data/CompressedPostings.java:20-174).
 
-Execution shape (Spark-first, doc-sharded like Ivory's broker
-architecture, docs/clue.html:164-180):
-
-1. driver: tokenize queries, resolve termids/df via the dictionary,
-   fold duplicate tokens into qtf;
-2. candidate postings runs: Parquet scan with a literal termid IN filter
-   (row-group pruning), broadcast-joined to the query-term table;
-3. each run is expanded to the docno shards it overlaps (salted runs hit
-   exactly one shard; rare single-run terms replicate to the few shards
-   they span — bounded by the salt threshold) and shuffled so one task
-   holds *all* query-term postings for one (qid, shard);
-4. kernel per (qid, shard): merge every term's block boundaries into a
-   segment grid; upper-bound each segment by the sum of per-term block
-   maxima (× qtf); visit segments in descending bound order, exactly
-   scoring each (vectorized decode + canonical float32 fold) and stop
-   when the next segment's bound is strictly below the running kth-best
-   score — block-max WAND re-organized for vectorized execution;
-5. per-query global top-k merge with Ivory's tie-break
-   (score desc, docno desc; Accumulator.java:38-53).
+Execution shape: a kernel plus parameters over the sharded top-k
+executor (query/sharded.py — doc-sharded like Ivory's broker
+architecture, docs/clue.html:164-180). The driver tokenizes the queries,
+resolves termids through Index.lookup_terms and folds duplicate tokens
+into qtf; the executor hands the kernel *all* query-term runs of one
+(qid, docno-shard) and merges the global top-k. The kernel merges every
+term's block boundaries into a segment grid, upper-bounds each segment
+by the sum of per-term block maxima (× qtf), visits segments in
+descending bound order, exactly scoring each (vectorized decode +
+canonical float32 fold), and stops when the next segment's bound is
+strictly below the running kth-best score — block-max WAND re-organized
+for vectorized execution.
 
 Results are bit-identical to the exact path and the numpy oracle because
 decode + scoring + accumulation all share the same kernels
@@ -35,12 +28,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ivory_spark.functions.scoring import F32, bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
-from ivory_spark.query.exact import candidate_postings, query_term_rows
+from ivory_spark.query.exact import query_term_rows
+from ivory_spark.query.sharded import local_topk, shard_runs, sharded_topk
 
 SEGMENT_BATCH = 32  # segments scored per pruning-check round
 
@@ -225,9 +219,7 @@ def _score_group(
     d, s = group_sum_f32(
         np.concatenate(all_docnos), np.concatenate(all_termids), np.concatenate(all_contribs)
     )
-    # top-k, score desc then docno desc
-    sel = np.lexsort((-d, -s.astype(np.float64)))[:k]
-    return d[sel], s[sel]
+    return local_topk(d, s, k)
 
 
 def bm25_topk_wand(
@@ -250,53 +242,13 @@ def bm25_topk_wand(
         )
     n_docs, avgdl = props["n_docs"], props["avgdl"]
     k1, b, idf_mode = props["k1"], props["b"], props["idf_mode"]
-    n_shards = props["n_shards"]
 
-    rows, termids = query_term_rows(index, queries)
-    qt = spark.createDataFrame(rows, "qid string, termid long, qtf int, df int, cf long")
-    schema = "qid string, rank int, docno long, score float"
-    if with_docid:
-        schema = "qid string, rank int, docno long, docid string, score float"
-    if not termids:
-        return spark.createDataFrame([], schema)
-
-    # df comes from the postings rows; drop qt's copy to avoid ambiguity.
-    # Project only WAND's columns — a positional index's pos_blob must be
-    # column-pruned out of the scan and never shuffled here.
-    runs = candidate_postings(index, termids).select(
-        "termid", "df", "n", "first_docno", "last_docno", "max_impact", "blob"
-    ).join(F.broadcast(qt.select("qid", "termid", "qtf")), "termid")
-    shard_of = lambda c: F.floor(c * F.lit(n_shards) / F.lit(n_docs + 1)).cast("int")
-    runs = runs.withColumn(
-        "shard", F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno"))))
+    rows, _ = query_term_rows(index, queries)
+    runs = shard_runs(
+        index, rows, ["termid", "df", "n", "first_docno", "last_docno", "max_impact", "blob"]
     )
 
-    def shard_bounds(s: int) -> tuple[int, int]:
-        lo = -((-s * (n_docs + 1)) // n_shards)  # ceil(s*(N+1)/S)
-        hi = -((-(s + 1) * (n_docs + 1)) // n_shards) - 1
-        return max(lo, 1), min(hi, n_docs)
+    def kernel(qid, pdf: pd.DataFrame, lo: int, hi: int):
+        return _score_group(pdf, n_docs, avgdl, k1, b, idf_mode, lo, hi, k)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        d, s = _score_group(pdf, n_docs, avgdl, k1, b, idf_mode, lo, hi, k)
-        return pd.DataFrame({"qid": np.repeat(qid, len(d)), "docno": d, "score": s})
-
-    # grouped_apply, not groupBy().applyInPandas: a query batch over the
-    # shard grid makes |queries| x n_shards tiny groups, and Spark's
-    # per-group Arrow dispatch (~8 ms each) would dominate the kernel —
-    # one mapInPandas stream per partition pays the tax once (gmap.py)
-    from ivory_spark.functions.gmap import grouped_apply
-
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        # topk is q*k rows but sits behind a window, so Catalyst has no
-        # size estimate and can pick a sort-merge join against the full
-        # docmap scan; broadcast the tiny side explicitly (guide §3.1)
-        topk = F.broadcast(topk).join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
+    return sharded_topk(index, runs, kernel, k, with_docid)
